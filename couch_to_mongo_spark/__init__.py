@@ -8,8 +8,9 @@ lineage — re-expressed Spark-first:
 - thread pool            -> Spark executors / Catalyst-planned scans
 - key-range partitions   -> hash buckets on conv_id (skew-safe)
 - in-memory dedup maps   -> last-writer-wins aggregation (partial-agg safe)
-- Mongo $set upsert      -> MERGE-as-copy-on-write into a mini lakehouse
-                            table (parquet + atomic snapshot log)
+- Mongo $set upsert      -> MERGE as a merge-on-read delta append into a
+                            mini lakehouse table (parquet + atomic
+                            snapshot log)
 - metadata collection    -> lineage table + Structured Streaming checkpoint
 """
 

@@ -11,11 +11,10 @@ same columns as the table, plus
   (committed-ness is determined against the table's fence map — the fence
   entry IS the commit record, so no per-row snapshot id is stored)
 
-Scale shape: the feed is O(changed rows) per batch — computed from the
-classification join the stats path already runs (one extra projection, no
-new shuffle) and appended as parquet. A 10^10-event replay emits 10^10
-feed rows total, written incrementally; consumers tail it like any
-append-only table.
+Scale shape: the feed is O(changed rows) per batch — one join of the
+batch's written delta against the touched buckets' resolved pre-state,
+appended as parquet. A 10^10-event replay emits 10^10 feed rows total,
+written incrementally; consumers tail it like any append-only table.
 
 Idempotence contract: each batch writes to a DETERMINISTIC directory
 ``<root>/run=<run_id>/batch=<batch_id>`` with overwrite semantics, BEFORE
@@ -206,7 +205,12 @@ def classify_changes(
       - insert            -> after image   (batch wins; key absent or dead)
       - update_preimage   -> before image  (batch wins over a live row)
       - update_postimage  -> after image   (batch wins over a live row)
-      - delete            -> before image  (tombstone wins over a live row)
+      - delete            -> before image  (tombstone wins over a live row),
+                             stamped with the TOMBSTONE's ``_seq``/``_rev``
+    The delete stamp lets a consumer that folds the feed with LWW (a
+    replica merging post-images and deletes) order the delete after the
+    row it deletes even when both arrive in one micro-batch; with the
+    pre-image's stamp the two tie and file order picks the winner.
     A tombstone over an absent/already-dead key is a state no-op and emits
     nothing (same rule as the n_deletes stat)."""
     from couch_to_mongo_spark.operators.dedup import with_rev_gen
@@ -240,18 +244,21 @@ def classify_changes(
         > _ord(f"_pre_{seq_col}", "_pre_rev_gen", f"_pre_{rev_col}")
     )
 
-    def image(df, change_type, pre: bool):
+    def image(df, change_type, pre_cols=()):
         sel = list(key_cols) + [
-            (F.col(f"_pre_{c}") if pre else F.col(c)).alias(c)
+            (F.col(f"_pre_{c}") if c in pre_cols else F.col(c)).alias(c)
             for c in cols
             if c not in key_cols
         ]
         return df.select(*sel).withColumn(CHANGE_TYPE_COL, F.lit(change_type))
 
-    inserts = image(j.where(~is_del & wins & ~pre_live), "insert", pre=False)
-    upd_post = image(j.where(~is_del & wins & pre_live), "update_postimage", pre=False)
-    upd_pre = image(j.where(~is_del & wins & pre_live), "update_preimage", pre=True)
-    deletes = image(j.where(is_del & wins & pre_live), "delete", pre=True)
+    before = set(cols)
+    inserts = image(j.where(~is_del & wins & ~pre_live), "insert")
+    upd_post = image(j.where(~is_del & wins & pre_live), "update_postimage")
+    upd_pre = image(j.where(~is_del & wins & pre_live), "update_preimage", before)
+    deletes = image(
+        j.where(is_del & wins & pre_live), "delete", before - {seq_col, rev_col}
+    )
 
     out = inserts.unionByName(upd_pre).unionByName(upd_post).unionByName(deletes)
     out = out.withColumn("_run_id", F.lit(run_id)).withColumn(

@@ -127,7 +127,7 @@ class RenderedCorpusView:
         convs = changed_convs.select("conv_id").distinct()
         if not broadcast_convs:
             # the conv set feeds THREE consumers (bucket-id collect, semi-
-            # join build, delete anti-join probe) and exchange reuse dies
+            # join build, tombstone left join) and exchange reuse dies
             # across differently-pruned branches — broadcast dedups the
             # derivation implicitly, but a giant non-broadcast catch-up set
             # would re-shuffle the distinct three times. Materialize once.
@@ -143,6 +143,9 @@ class RenderedCorpusView:
             ).collect()
             touched = sorted({r["b"] for r in pairs})
             conv_ids = [r["conv_id"] for r in pairs]
+            # the collected ids stand in for the conv set downstream: the
+            # tombstone join never re-scans the batch or re-runs the distinct
+            convs = self.spark.createDataFrame([(c,) for c in conv_ids], convs.schema)
         else:
             touched = [
                 r["b"]
@@ -159,28 +162,19 @@ class RenderedCorpusView:
             raw = raw.join(build, "conv_id", "left_semi")
         live = resolve_live_state(raw)
         rendered = render_conversations(live, **self.render_opts)
-        upserts = rendered.select(
+        # ONE left join classifies every changed conv: with live turns it
+        # gets its rendered doc, with none (fully tombstoned) a delete row
+        return convs.join(
+            rendered.withColumn("_live", F.lit(True)), "conv_id", "left"
+        ).select(
             "conv_id",
             F.lit(0).cast("int").alias("turn_idx"),
             "n_turns",
             "n_chars",
             F.col("doc").alias("text"),
-            F.lit("u").alias("op"),
+            F.when(F.col("_live").isNull(), F.lit("d")).otherwise(F.lit("u")).alias("op"),
             F.lit(int(seq)).alias("seq"),
         )
-        deletes = (
-            convs.join(rendered.select("conv_id"), "conv_id", "left_anti")
-            .select(
-                "conv_id",
-                F.lit(0).cast("int").alias("turn_idx"),
-                F.lit(None).cast("long").alias("n_turns"),
-                F.lit(None).cast("long").alias("n_chars"),
-                F.lit(None).cast("string").alias("text"),
-                F.lit("d").alias("op"),
-                F.lit(int(seq)).alias("seq"),
-            )
-        )
-        return upserts.unionByName(deletes)
 
     def catch_up(
         self,

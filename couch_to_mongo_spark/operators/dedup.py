@@ -92,34 +92,6 @@ def salted_lww(
     return phase2.select(*[F.col(f"_w.{c}").alias(c) for c in payload])
 
 
-def lww_dedup_join(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-) -> DataFrame:
-    """Throughput LWW kernel: hash-agg the winning order tuple per key
-    (small rows: keys + order only), then join back to fetch payloads.
-
-    ~4x faster than :func:`lww_dedup` on wide rows: ``max_by``'s aggregation
-    buffer carries the whole payload struct, forcing a SortAggregate that
-    per-partition-sorts and shuffles full rows; here the aggregate touches
-    only (keys, order) and the payload moves through exactly one join
-    shuffle, hash-joinable under AQE.
-
-    Caveat: rows whose order tuple ties the per-key max ALL survive — ties
-    require byte-identical duplicate events (seq is globally unique), which
-    the MOR read path collapses anyway. Use :func:`lww_dedup` where exact
-    one-row-per-key output matters pre-write.
-    """
-    ostruct = _order_struct(order_cols)
-    wins = df.groupBy(*key_cols).agg(F.max(ostruct).alias("__w"))
-    return (
-        df.join(wins, key_cols)
-        .where(ostruct == F.col("__w"))
-        .drop("__w")
-    )
-
-
 def lww_dedup_window(
     df: DataFrame,
     key_cols: list[str],

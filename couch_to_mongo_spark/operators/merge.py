@@ -1,4 +1,4 @@
-"""MERGE INTO as bucket-scoped copy-on-write (SURVEY.md §2.1 S6, §2.6 JN3).
+"""MERGE INTO as a merge-on-read delta append (SURVEY.md §2.1 S6, §2.6 JN3).
 
 Semantics of the reference's upsert sink — unordered bulkWrite of
 ``UpdateOneModel({_id}, {$set: doc}, upsert=true)`` (reference:
@@ -12,30 +12,38 @@ SURVEY.md §2.10):
     WHEN MATCHED AND (s._seq, s.rev) > (t._seq, t.rev) THEN UPDATE SET *
     WHEN NOT MATCHED THEN INSERT *
 
-Physical plan (no Iceberg/Delta jars in this image, so copy-on-write from
-scratch), chosen to be **order-insensitive**: the table stores the winning
-``(_seq, _rev)`` per key plus tombstones (``_deleted``), so MERGE is just
+Physical plan (no Iceberg/Delta dependency, so the table format is built
+from scratch), chosen to be **order-insensitive**: the table stores the
+winning ``(_seq, _rev)`` per key plus tombstones (``_deleted``), and
+readers resolve
 
-    winners = LWW( existing(touched buckets) ∪ batch )
+    state = LWW( every delta row of a bucket )
 
-— one hash aggregation with map-side partial combine (skew-safe), no
-anti-join, no conditional update logic. Replaying any batch, in any order,
-reconverges to the same state; deletes are durable tombstones (purged by
-compaction), fixing the reference's delete-resurrection gap.
+so MERGE is an append — no anti-join, no conditional update logic, no
+rewrite of existing rows. Replaying any batch, in any order, reconverges
+to the same state; deletes are durable tombstones (purged by compaction),
+fixing the reference's delete-resurrection gap.
 
-Steps:
-1. batch is LWW-deduped to one row per key (dedup-before-merge bounds any
-   hot-conversation skew: at most one row per key reaches the rewrite);
-2. touched buckets = distinct ``pmod(xxhash64(conv_id), n_buckets)`` of
-   the batch — only those buckets are read and rewritten, O(changed) I/O;
-3. ``existing ∪ batch`` → ``max_by(row, (_seq, rev_gen, _rev, _src))``
-   per key; tombstone rows kept (flagged), schema evolved by union;
-4. winners written per-bucket; snapshot committed atomically with lineage
-   and the (run_id, batch_id) fence entry.
+Steps (one write path):
+1. one exchange: the batch is repartitioned by bucket ``pmod(xxhash64(
+   conv_id), n_buckets)`` and LWW-deduped inside those partitions, so one
+   row per key reaches the write;
+2. the post-dedup transform runs on the winners; poison rows are
+   quarantined;
+3. the winners stream out of the same partitions as per-bucket delta
+   files; the touched buckets are the buckets written, so I/O is
+   O(changed);
+4. lineage stats (``collect_stats``) come from ONE aggregate over the
+   written delta, the touched buckets' pre-state and the raw batch; the
+   change feed (``cdf``) is classified from the same written delta;
+5. the snapshot is committed atomically with lineage and the
+   ``(run_id, batch_id)`` fence entry. Compaction (operators/compact.py)
+   folds buckets back to one file.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import asdict, dataclass
 from typing import Any, Sequence
 
@@ -58,7 +66,7 @@ REV_COL = "_rev"
 DELETED_COL = "_deleted"
 ENGINE_COLS = (SEQ_COL, REV_COL, DELETED_COL)
 # transient columns never persisted
-TRANSIENT_COLS = ("op", "seq", "rev_gen", "_src", "_salt", BUCKET_COL)
+TRANSIENT_COLS = ("op", "seq", "rev_gen", "_salt", BUCKET_COL)
 
 
 def engine_fields() -> list[T.StructField]:
@@ -100,10 +108,8 @@ def merge_batch(
     op_col: str = "op",
     seq_col: str = "seq",
     rev_col: str = "_rev",
-    already_deduped: bool = False,
     files_per_bucket: int = 1,
     collect_stats: bool = True,
-    mode: str = "mor",
     transform_after_dedup=None,
     dead_letter=None,
     cdf=None,
@@ -112,23 +118,24 @@ def merge_batch(
 
     ``batch_df`` columns: key_cols + op + seq + _rev + payload columns.
 
-    mode='mor' (default, merge-on-read): append the LWW-deduped batch
-    (including tombstones) as per-bucket delta files — write cost O(batch),
-    never O(table); readers resolve multi-version rows via the same LWW
-    ordering (read_state), and compaction (operators/compact.py) folds
-    buckets back to one file. This is what survives 10^10 events: COW's
-    per-batch bucket rewrite is O(batches x table) when batches touch all
-    buckets.
+    The LWW-deduped batch (tombstones included) is appended as per-bucket
+    delta files — write cost O(batch), never O(table). Readers resolve
+    multi-version rows with the same LWW ordering (:func:`read_state`) and
+    compaction folds buckets back to one file.
 
-    mode='cow' (copy-on-write): rewrite touched buckets to contain only
-    winners — reads pay nothing, writes pay O(touched buckets). Also used
-    as the compaction kernel.
+    ``collect_stats`` fills the lineage counts: ``n_inserts`` /
+    ``n_updates`` / ``n_deletes`` classify each written row against the
+    LWW-resolved live pre-state of its key, and ``seq_min`` / ``seq_max``
+    are the raw SOURCE range (pre-dedup, poison rows included — the
+    analogue of the reference's per-doc sequence audit, Mongo.java:535).
+    Without it, ``rows_applied`` / ``seq_min`` / ``seq_max`` are the
+    written rows and their ``_seq`` range, read from the parquet footers
+    at no Spark cost.
 
     ``cdf`` (a :class:`~couch_to_mongo_spark.operators.cdf.ChangeFeedLog`):
     emit row-level semantic changes (insert / update pre+post images /
-    delete) for this batch — O(changed rows), derived from the same
-    pre-state the stats classification reads. Forces the stats-shaped path
-    (pre-images need the touched buckets' live winners).
+    delete) for this batch — O(changed rows), classified from the written
+    delta against the touched buckets' full-width pre-state.
     """
     if table.is_batch_committed(run_id, batch_id):
         return MergeResult(skipped=True)
@@ -145,86 +152,17 @@ def merge_batch(
     if rev_col not in b.columns:
         b = b.withColumn(rev_col, F.lit(None).cast("string"))
     b = with_rev_gen(b, rev_col=rev_col)
-    order_in_batch = [seq_col, "rev_gen", rev_col]
-    fast_mor = mode == "mor" and not collect_stats and cdf is None
-    raw_range = None
-    if collect_stats and not already_deduped:
-        # lineage records the *source* seq range (pre-dedup), the analogue of
-        # the reference's per-doc sequence-number audit (Mongo.java:535)
-        raw_range = batch_df.agg(
-            F.min(seq_col).alias("mn"), F.max(seq_col).alias("mx")
-        ).collect()[0]
-    if fast_mor:
-        # FAST PATH — single-shuffle apply. The ONE exchange is the bucket
-        # repartition, done FIRST; everything downstream reuses it: the
-        # partition keys are a subset of the dedup window's partitionBy, so
-        # Catalyst plans the LWW as Sort+WindowGroupLimit+Window with NO
-        # further exchange (WindowGroupLimit prunes losers during the
-        # sort), and the bucket-partitioned write streams straight out of
-        # the same partitions (one file per bucket x salt). The payload
-        # crosses the wire exactly once; round-1's kernel moved it twice
-        # (dedup-join shuffle on key, then the write repartition).
-        # Plan-asserted in tests/test_plans.py::test_fast_merge_single_shuffle.
-        if already_deduped:
-            n_parts = n_buckets * max(files_per_bucket, 1)
-            b = b.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
-            b = b.repartition(n_parts, F.col(BUCKET_COL))
-        else:
-            b = bucket_partitioned_lww(
-                b, key_cols, order_in_batch, n_buckets, files_per_bucket
-            )
-        b, n_poison, poison_cache = _transform_and_quarantine(
-            b, transform_after_dedup, dead_letter, run_id, batch_id
-        )
-        b = (
-            b.withColumn(DELETED_COL, F.col(op_col) == F.lit("d"))
-            .withColumnRenamed(seq_col, SEQ_COL)
-        )
-        if rev_col != REV_COL:
-            b = b.withColumnRenamed(rev_col, REV_COL)
-        payload_fields = [
-            f
-            for f in b.schema.fields
-            if f.name not in TRANSIENT_COLS and f.name not in ENGINE_COLS
-        ]
-        evolved = evolve_schema(
-            snap.schema, with_engine_schema(T.StructType(payload_fields))
-        )
-        # align drops the physical bucket/salt columns; the ROWS stay in
-        # their bucket partitions (projections preserve partitioning), so
-        # the partitionBy write still emits one file per bucket x salt
-        new_rows = align_to_schema(b, evolved).withColumn(
-            BUCKET_COL, bucket_expr(key_cols[0], n_buckets)
-        )
-        delta = table.write_bucketed(
-            new_rows, snapshot_hint=f"s{snap.version + 1:08d}", n_buckets=n_buckets
-        )
-        touched = sorted(delta.keys())
-        result = MergeResult(skipped=False, touched_buckets=len(touched), n_poison=n_poison)
-        rows, mn, mx, per_file = _footer_seq_stats(table, delta)
-        result.rows_applied = rows
-        # Fast-path lineage semantics: seq_min/seq_max are the APPLIED
-        # (post-dedup, post-quarantine winner) range from the written files'
-        # footers — the stats path records the raw SOURCE range instead
-        # (Mongo.java:535 audit analogue), at the cost of an extra agg pass
-        # the fast path exists to avoid. Resume correctness is unaffected
-        # (fencing is by batch id; re-apply is idempotent); audits wanting
-        # source ranges should run with collect_stats=True.
-        result.seq_min, result.seq_max = mn, mx
-        # append commit: rebases automatically under concurrent writers
-        new_snap = table.commit(
-            delta, touched, result.to_lineage(), new_schema=evolved,
-            run_id=run_id, batch_id=batch_id, append=True,
-            new_file_stats=per_file,
-        )
-        result.snapshot_id = new_snap.snapshot_id
-        if poison_cache is not None:
-            poison_cache.unpersist()
-        return result
-
-    # ---- stats / COW path: exact one-row-per-key dedup, then classify ----
-    if not already_deduped:
-        b = lww_dedup(b, key_cols, order_in_batch)
+    # Single-shuffle apply. The ONE exchange is the bucket repartition,
+    # done FIRST; everything downstream reuses it: the partition keys are a
+    # subset of the dedup window's partitionBy, so Catalyst plans the LWW
+    # as Sort+WindowGroupLimit+Window with NO further exchange
+    # (WindowGroupLimit prunes losers during the sort), and the
+    # bucket-partitioned write streams straight out of the same partitions
+    # (one file per bucket x salt). The payload crosses the wire exactly
+    # once. Plan-asserted in tests/test_plans.py::test_fast_merge_single_shuffle.
+    b = bucket_partitioned_lww(
+        b, key_cols, [seq_col, "rev_gen", rev_col], n_buckets, files_per_bucket
+    )
     b, n_poison, poison_cache = _transform_and_quarantine(
         b, transform_after_dedup, dead_letter, run_id, batch_id
     )
@@ -234,153 +172,129 @@ def merge_batch(
     )
     if rev_col != REV_COL:
         b = b.withColumnRenamed(rev_col, REV_COL)
-    b = b.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
-
     payload_fields = [
         f
         for f in b.schema.fields
         if f.name not in TRANSIENT_COLS and f.name not in ENGINE_COLS
     ]
-    evolved = evolve_schema(snap.schema, with_engine_schema(T.StructType(payload_fields)))
-
-    b = b.persist()
-    ex_cache = None
-    try:
-        touched = [r[0] for r in b.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            new_snap = table.commit(
-                {}, [], MergeResult(skipped=False).to_lineage(), run_id=run_id, batch_id=batch_id
-            )
-            return MergeResult(skipped=False, snapshot_id=new_snap.snapshot_id)
-
-        existing = None
-        if collect_stats or mode != "mor" or cdf is not None:
-            existing = table.read_buckets(touched)
-
-        stats_row = None
-        ex_keys = None
-        if collect_stats or cdf is not None:
-            # LWW-resolved LIVE pre-state of the touched buckets. Live = the
-            # RESOLVED winner is non-deleted (not "any version non-deleted"):
-            # after delete-then-reinsert the reinsert must classify as an
-            # insert, and a delete of an already-tombstoned key must not
-            # count as a delete. Narrow (keys+engine) when only stats need
-            # it; full width when CDF pre-images do.
-            src = (
-                align_to_schema(existing, evolved)
-                if cdf is not None
-                else existing.select(*key_cols, SEQ_COL, REV_COL, DELETED_COL)
-            )
-            ex = with_rev_gen(src, rev_col=REV_COL)
-            ex = lww_dedup(ex, key_cols, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
-            if collect_stats and cdf is not None:
-                # both consumers (CDF classification join + stats ex_keys
-                # join) read the same pre-state scan+dedup: persist it so
-                # the touched-bucket read and LWW run once per batch
-                ex_cache = ex.persist()
-                ex = ex_cache
-            ex_live = ex.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-            ex_keys = ex_live.select(*key_cols).withColumn("_m", F.lit(1))
+    evolved = evolve_schema(
+        snap.schema, with_engine_schema(T.StructType(payload_fields))
+    )
+    # align drops the physical bucket/salt columns; the ROWS stay in their
+    # bucket partitions (projections preserve partitioning), so the
+    # partitionBy write still emits one file per bucket x salt
+    new_rows = align_to_schema(b, evolved).withColumn(
+        BUCKET_COL, bucket_expr(key_cols[0], n_buckets)
+    )
+    delta = table.write_bucketed(
+        new_rows, snapshot_hint=f"s{snap.version + 1:08d}", n_buckets=n_buckets
+    )
+    if poison_cache is not None:
+        poison_cache.unpersist()
+    touched = sorted(delta.keys())
+    rows, mn, mx, per_file = _footer_seq_stats(table, delta)
+    result = MergeResult(
+        skipped=False,
+        rows_applied=rows,
+        seq_min=mn,
+        seq_max=mx,
+        touched_buckets=len(touched),
+        n_poison=n_poison,
+    )
+    if touched and (collect_stats or cdf is not None):
+        # Both consumers read the delta back by path (a narrow column scan,
+        # not a re-run of the dedup) and the touched buckets AS OF `snap`:
+        # the pre-state is the one this batch merged onto, whatever a
+        # concurrent writer appends to these buckets before our commit.
+        written = table.spark.read.schema(evolved).parquet(
+            *[os.path.join(table.path, f) for fl in delta.values() for f in fl]
+        )
+        pre = table.read_buckets(touched, version=snap.version)
         if cdf is not None:
-            from couch_to_mongo_spark.operators.cdf import classify_changes
-
-            changes, cdf_cache = classify_changes(
-                align_to_schema(b, evolved),
-                ex,  # RESOLVED winners incl. tombstones (see classify docstring)
-                list(key_cols),
-                DELETED_COL,
-                [f.name for f in evolved.fields],
-                run_id,
-                batch_id,
-            )
-            # written BEFORE the commit to a deterministic per-batch dir
-            # (overwrite): crash-replay rewrites identical content; orphan
-            # rows of a never-committed batch are excluded by fence-aware
-            # reads (ChangeFeedLog.read committed_only)
-            cdf.append(changes, run_id, batch_id)
-            cdf_cache.unpersist()
+            _emit_changes(cdf, written, pre, evolved, key_cols, run_id, batch_id)
         if collect_stats:
-            # one-pass classification of batch rows against existing live keys
-            cls = b.select(*key_cols, DELETED_COL, SEQ_COL).join(ex_keys, key_cols, "left")
-            is_del = F.col(DELETED_COL)
-            matched = F.col("_m").isNotNull()
-            stats_row = cls.agg(
-                F.min(SEQ_COL).alias("seq_min"),
-                F.max(SEQ_COL).alias("seq_max"),
-                F.count(F.when(~is_del & ~matched, 1)).alias("n_inserts"),
-                F.count(F.when(~is_del & matched, 1)).alias("n_updates"),
-                F.count(F.when(is_del & matched, 1)).alias("n_deletes"),
-            ).collect()[0]
+            _fold_stats(result, written, pre, batch_df, key_cols, seq_col)
+    # append commit: rebases automatically under concurrent writers
+    new_snap = table.commit(
+        delta, touched, result.to_lineage(), new_schema=evolved,
+        run_id=run_id, batch_id=batch_id, append=True,
+        new_file_stats=per_file,
+    )
+    result.snapshot_id = new_snap.snapshot_id
+    return result
 
-        if mode == "mor":
-            # append deduped batch (with tombstones) as delta files
-            new_rows = align_to_schema(b, evolved)
-        else:
-            # --- union + LWW: existing vs batch rows, batch wins ties ---
-            ex = align_to_schema(existing, evolved).withColumn("_src", F.lit(0))
-            ba = align_to_schema(b, evolved).withColumn("_src", F.lit(1))
-            combined = ex.unionByName(ba)
-            combined = with_rev_gen(combined, rev_col=REV_COL)
-            winners = lww_dedup(combined, key_cols, [SEQ_COL, "rev_gen", REV_COL, "_src"])
-            new_rows = winners.drop("rev_gen", "_src")
-        new_rows = new_rows.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
 
-        n_parts = max(len(touched), 1) * max(files_per_bucket, 1)
-        if files_per_bucket > 1:
-            # salt hash seeded independently of the bucket hash (see
-            # bucket_partitioned_lww): same-hash double-mod degenerates to a
-            # constant salt per bucket whenever files_per_bucket | n_buckets
-            new_rows = new_rows.repartition(
-                n_parts,
-                F.col(BUCKET_COL),
-                F.pmod(F.xxhash64(F.col(key_cols[0]), F.lit(1)), F.lit(files_per_bucket)),
-            )
-        else:
-            new_rows = new_rows.repartition(n_parts, F.col(BUCKET_COL))
+def _fold_stats(result, written, pre, batch_df, key_cols, seq_col) -> None:
+    """Fill ``result``'s lineage counts and source seq range from ONE
+    aggregate: the union of the pre-state (``_src`` 0), the written delta
+    (1) and the raw batch (2), grouped by key, then folded to one row.
 
-        new_files = table.write_bucketed(
-            new_rows, snapshot_hint=f"s{snap.version + 1:08d}", n_buckets=n_buckets
+    Per key: the pre-state's LWW-resolved winner says whether the key was
+    live (the RESOLVED winner is non-deleted, not "any version non-deleted":
+    after delete-then-reinsert the reinsert is an insert, and a delete of
+    an already-tombstoned key is not a delete); the written row (one per
+    key) says upsert or tombstone; the raw rows give the source seq range,
+    which is below the winners' range when a key repeats in the batch."""
+    eng = [*key_cols, SEQ_COL, REV_COL, DELETED_COL]
+    u = (
+        pre.select(*eng).withColumn("_src", F.lit(0))
+        .unionByName(written.select(*eng).withColumn("_src", F.lit(1)))
+        .unionByName(
+            batch_df.select(*key_cols, F.col(seq_col).alias(SEQ_COL))
+            .withColumn("_src", F.lit(2)),
+            allowMissingColumns=True,
         )
+    )
+    u = with_rev_gen(u, rev_col=REV_COL)
+    src = F.col("_src")
+    per_key = u.groupBy(*key_cols).agg(
+        F.max_by(
+            F.when(src == 0, F.coalesce(F.col(DELETED_COL), F.lit(False))),
+            F.when(src == 0, F.struct(SEQ_COL, "rev_gen", REV_COL)),
+        ).alias("pre_dead"),
+        F.max(F.when(src == 1, F.col(DELETED_COL))).alias("new_dead"),
+        F.min(F.when(src == 2, F.col(SEQ_COL))).alias("lo"),
+        F.max(F.when(src == 2, F.col(SEQ_COL))).alias("hi"),
+    )
+    # a key with no pre-state row has a null pre_dead: not live
+    pre_live = F.coalesce(~F.col("pre_dead"), F.lit(False))
+    new_dead = F.col("new_dead")
+    row = per_key.agg(
+        F.min("lo").alias("seq_min"),
+        F.max("hi").alias("seq_max"),
+        F.count(F.when(~new_dead & ~pre_live, 1)).alias("n_inserts"),
+        F.count(F.when(~new_dead & pre_live, 1)).alias("n_updates"),
+        F.count(F.when(new_dead & pre_live, 1)).alias("n_deletes"),
+    ).collect()[0]
+    result.n_inserts = row["n_inserts"]
+    result.n_updates = row["n_updates"]
+    result.n_deletes = row["n_deletes"]
+    result.rows_applied = row["n_inserts"] + row["n_updates"] + row["n_deletes"]
+    result.seq_min, result.seq_max = row["seq_min"], row["seq_max"]
 
-        result = MergeResult(skipped=False, touched_buckets=len(touched), n_poison=n_poison)
-        # footer pass always runs: per-file seq bounds feed the snapshot's
-        # scan-pruning stats even when row classification came from the join
-        rows, mn, mx, per_file = _footer_seq_stats(table, new_files)
-        if stats_row is None:
-            result.rows_applied = rows
-            result.seq_min = raw_range["mn"] if raw_range is not None else mn
-            result.seq_max = raw_range["mx"] if raw_range is not None else mx
-        if stats_row is not None:
-            result.n_inserts = stats_row["n_inserts"]
-            result.n_updates = stats_row["n_updates"]
-            result.n_deletes = stats_row["n_deletes"]
-            result.rows_applied = (
-                stats_row["n_inserts"] + stats_row["n_updates"] + stats_row["n_deletes"]
-            )
-            result.seq_min = raw_range["mn"] if raw_range is not None else stats_row["seq_min"]
-            result.seq_max = raw_range["mx"] if raw_range is not None else stats_row["seq_max"]
-        new_snap = table.commit(
-            new_files,
-            touched,
-            result.to_lineage(),
-            new_schema=evolved,
-            run_id=run_id,
-            batch_id=batch_id,
-            # MOR appends deltas (always rebaseable); COW replaces the
-            # touched buckets it rewrote from `snap` (conflicts if a
-            # concurrent commit touched them since).
-            append=(mode == "mor"),
-            base_version=None if mode == "mor" else snap.version,
-            new_file_stats=per_file,
-        )
-        result.snapshot_id = new_snap.snapshot_id
-        return result
-    finally:
-        b.unpersist()
-        if ex_cache is not None:
-            ex_cache.unpersist()
-        if poison_cache is not None:
-            poison_cache.unpersist()
+
+def _emit_changes(cdf, written, pre, evolved, key_cols, run_id, batch_id) -> None:
+    """Classify the written delta against the LWW-resolved full-width
+    pre-state (tombstone winners included, see classify_changes) and
+    write this batch's change-feed rows. Written BEFORE the commit to a
+    deterministic per-batch dir (overwrite): a crash-replay rewrites
+    identical content, and rows of a never-committed batch are excluded
+    by fence-aware reads (ChangeFeedLog.read committed_only)."""
+    from couch_to_mongo_spark.operators.cdf import classify_changes
+
+    ex = with_rev_gen(align_to_schema(pre, evolved), rev_col=REV_COL)
+    ex = lww_dedup(ex, key_cols, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+    changes, cache = classify_changes(
+        written,
+        ex,
+        key_cols,
+        DELETED_COL,
+        [f.name for f in evolved.fields],
+        run_id,
+        batch_id,
+    )
+    cdf.append(changes, run_id, batch_id)
+    cache.unpersist()
 
 
 def read_state(
@@ -392,7 +306,7 @@ def read_state(
 
     Merge-on-read resolution: LWW over (_seq, rev_gen, _rev) collapses the
     multi-version delta rows; tombstone winners are then dropped. On a
-    compacted/COW table the dedup is a no-op pass."""
+    compacted table the dedup is a no-op pass."""
     df = table.read(version)
     key_cols = [c for c in key_cols if c in df.columns]
     if SEQ_COL in df.columns and key_cols:
@@ -402,7 +316,6 @@ def read_state(
     if DELETED_COL in df.columns:
         df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
     return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
-
 
 
 def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, batch_id):
@@ -424,10 +337,14 @@ def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, bat
                 f"transform produced {POISON_COL} but no dead_letter log given"
             )
         poison_cache = b.persist()
-        poison = poison_cache.where(F.col(POISON_COL).isNotNull())
+        # the physical bucket/salt columns are write routing, not audit data
+        poison = poison_cache.where(F.col(POISON_COL).isNotNull()).drop(
+            BUCKET_COL, "_salt"
+        )
         n_poison = dead_letter.append(poison, run_id, batch_id)
         b = poison_cache.where(F.col(POISON_COL).isNull()).drop(POISON_COL)
     return b, n_poison, poison_cache
+
 
 def _one_footer(path: str) -> tuple[int, int | None, int | None]:
     """(rows, seq_min, seq_max) of one parquet file from its footer."""
@@ -461,10 +378,8 @@ def _footer_seq_stats(table, new_files):
     every file of the table, so above a threshold the footer reads fan out
     to a thread pool (pyarrow releases the GIL on I/O): a 10^5-file table
     must not pay 10^5 serial opens in its commit path."""
-    import os as _os
-
     rel = [f for fl in new_files.values() for f in fl]
-    paths = [_os.path.join(table.path, f) for f in rel]
+    paths = [os.path.join(table.path, f) for f in rel]
     if len(paths) > _FOOTER_PARALLEL_THRESHOLD:
         from concurrent.futures import ThreadPoolExecutor
 

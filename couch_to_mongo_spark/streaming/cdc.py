@@ -92,7 +92,6 @@ class CdcPipeline:
         since_seq: int | None = None,
         files_per_bucket: int = 1,
         collect_stats: bool = True,
-        mode: str = "mor",
         compact_threshold: int = 8,
         compact_async: bool = True,
         quarantine_poison: bool = False,
@@ -114,7 +113,6 @@ class CdcPipeline:
         self.since_seq = since_seq
         self.files_per_bucket = files_per_bucket
         self.collect_stats = collect_stats
-        self.mode = mode
         self.compact_threshold = compact_threshold
         self.compact_async = compact_async
         self.compactions = 0
@@ -209,6 +207,9 @@ class CdcPipeline:
     # ---------------- foreachBatch body ----------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        # a forever tail never reaches finish_maintenance(): a failed
+        # background pass fails the NEXT batch, before it applies anything
+        self._raise_maintenance_error()
         # schema drift fence BEFORE any commit: ONE footer pass over the
         # batch's input files detects new columns, type widening (int->long
         # mid-stream), and off-lattice incompatible changes (long->string).
@@ -245,7 +246,6 @@ class CdcPipeline:
             batch_id=batch_id,
             files_per_bucket=self.files_per_bucket,
             collect_stats=self.collect_stats,
-            mode=self.mode,
             transform_after_dedup=transform,
             dead_letter=self.dead_letter,
             cdf=self.cdf,
@@ -347,10 +347,8 @@ class CdcPipeline:
         merges, so the racing thread is safe; at most one compaction runs
         at a time. The maintained view's MOR deltas (one per touched view
         bucket per refresh — unbounded without folding) compact in the
-        same guarded pass: view refreshes always merge in MOR mode, so
-        the view leg is gated on compact_threshold only, not the
-        primary's mode."""
-        do_primary = self.mode == "mor" and bool(self.compact_threshold)
+        same guarded pass."""
+        do_primary = bool(self.compact_threshold)
         do_view = self.view is not None and bool(self.compact_threshold)
         applied_now = self.batches_applied
         do_expire = bool(
@@ -390,7 +388,7 @@ class CdcPipeline:
         def run():
             try:
                 work()
-            except BaseException as e:  # surfaced on join
+            except BaseException as e:  # surfaced by the next batch or join
                 self._compact_error = e
 
         self._compact_thread = threading.Thread(target=run, daemon=True, name="c2m-compact")
@@ -402,15 +400,20 @@ class CdcPipeline:
         if self._compact_thread is not None:
             self._compact_thread.join()
             self._compact_thread = None
-        if self._compact_error is not None:
-            err, self._compact_error = self._compact_error, None
-            raise err
+        self._raise_maintenance_error()
         if self.view is not None and self.view_refresh_every > 1:
             # no-op (None, no commit) when the last modulo trigger already
             # caught up; otherwise covers every batch since the view's
             # high-water stamp, crashed-run leftovers included. Fenced at
             # the primary's seq hwm under the dedicated catch-up run key.
             self.view.catch_up(run_id=f"{self.run_id}:catchup")
+
+    def _raise_maintenance_error(self) -> None:
+        """Re-raise (once) the error of a failed background maintenance
+        pass: compaction or snapshot expiry."""
+        if self._compact_error is not None:
+            err, self._compact_error = self._compact_error, None
+            raise err
 
     def _backfill_lineage(self, batch_id: int) -> None:
         if self.lineage.has(self.run_id, batch_id):

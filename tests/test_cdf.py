@@ -6,6 +6,7 @@ never-committed batches must be excluded by fence-aware reads."""
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.operators.cdf import ChangeFeedLog
@@ -210,12 +211,57 @@ def test_cdf_tombstone_semantics(spark, tmp_path):
     assert list(live["text"]) == ["v2"]
 
 
+def _replica_rows(feed):
+    """Feed rows as a change batch for a replica: post-images + tombstones
+    only; the feed's _seq/_rev drive the replica's own LWW, so redelivery
+    is harmless."""
+    return (
+        feed.where(F.col("_change_type").isin("insert", "update_postimage", "delete"))
+        .withColumn("op", F.when(F.col("_change_type") == "delete", "d").otherwise("u"))
+        .withColumnRenamed("_seq", "seq")
+        .drop("_change_type", "_run_id", "_batch_id", "_deleted")
+    )
+
+
+def test_cdf_delete_carries_tombstone_order(spark, tmp_path):
+    """A delete row keeps the pre-image payload but the TOMBSTONE's
+    _seq/_rev: a replica that gets an insert and its delete in one
+    micro-batch must order them by LWW, not by file order (with the
+    pre-image's stamp the two rows tie)."""
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=2
+    )
+    cdf = ChangeFeedLog(spark, str(tmp_path / "cdf"))
+    proto = make_changes_df(n_events=10, n_convs=1, seed=65, delete_frac=0.0).iloc[0]
+
+    def row(seq, op, text):
+        r = proto.copy()
+        r["seq"], r["op"], r["text"], r["_rev"] = seq, op, text, f"{seq}-x"
+        return spark.createDataFrame(pd.DataFrame([r]))
+
+    merge_batch(table, row(10, "i", "v1"), run_id="r", batch_id=0, cdf=cdf)
+    merge_batch(table, row(20, "d", "v1"), run_id="r", batch_id=1, cdf=cdf)
+
+    feed = cdf.read(table)
+    dele = feed.where("_change_type = 'delete'").toPandas()
+    assert list(dele["_seq"]) == [20] and list(dele["_rev"]) == ["20-x"]
+    assert list(dele["text"]) == ["v1"]  # payload: the pre-image
+
+    rows = _replica_rows(feed)
+    for i, ordered in enumerate((rows.orderBy("seq"), rows.orderBy(F.desc("seq")))):
+        mirror = LakeTable.create(
+            spark, str(tmp_path / f"mirror{i}"), with_engine_schema(TRANSCRIPT_SCHEMA),
+            n_buckets=2,
+        )
+        merge_batch(mirror, ordered.coalesce(1), run_id="m", batch_id=0,
+                    collect_stats=False)
+        assert read_state(mirror).count() == 0, i
+
+
 def test_cdf_feeds_a_downstream_replica_stream(spark, tmp_path):
     """CDC-out end to end: a Structured Streaming consumer tails the change
     feed and MERGEs it into a second LakeTable — the replica converges to
     the primary's exact live state (replication chains compose)."""
-    from pyspark.sql import functions as F
-
     from couch_to_mongo_spark.operators.cdf import feed_as_stream
 
     table, cdf, pdf, _ = _setup(spark, tmp_path, n_events=1500)
@@ -227,21 +273,10 @@ def test_cdf_feeds_a_downstream_replica_stream(spark, tmp_path):
     )
 
     def apply_batch(batch_df, batch_id):
-        # post-images + tombstones only; the feed's _seq/_rev drive the
-        # replica's own LWW, so redelivery is harmless
-        rows = (
-            batch_df.where(
-                F.col("_change_type").isin("insert", "update_postimage", "delete")
-            )
-            .withColumn(
-                "op", F.when(F.col("_change_type") == "delete", "d").otherwise("u")
-            )
-            .withColumnRenamed("_seq", "seq")
-            .drop("_change_type", "_run_id", "_batch_id", "_deleted")
-        )
         from couch_to_mongo_spark.operators.merge import merge_batch as mb
 
-        mb(mirror, rows, run_id="mirror", batch_id=batch_id, collect_stats=False)
+        mb(mirror, _replica_rows(batch_df), run_id="mirror", batch_id=batch_id,
+           collect_stats=False)
 
     q = (
         feed_as_stream(spark, cdf.root, feed_schema, max_files_per_trigger=2)

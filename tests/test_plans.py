@@ -275,3 +275,65 @@ def test_corpus_view_refresh_plan_shape(spark, tmp_path):
     # distinct over the batch source)
     plan_nb = formatted_plan(view.plan_refresh(one, seq=100, broadcast_convs=False))
     assert "ExistingRDD" in plan_nb, plan_nb
+
+
+# Spark jobs per call, counted under a job group. AQE submits every shuffle
+# map stage as a job of its own, so a count is shuffles + actions.
+MERGE_JOBS_FAST = 2  # bucket shuffle, write
+MERGE_JOBS_STATS = 5  # bucket shuffle, write, stats: 2 shuffles + collect
+MERGE_JOBS_CDF = 12  # + pre-state LWW, classification join, feed write
+REFRESH_JOBS = 7  # conv-id collect (2), LWW + render shuffles, view merge
+
+
+def _count_jobs(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = [sc.getLocalProperty(k) for k in keys]
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        for k, v in zip(keys, saved):
+            sc.setLocalProperty(k, v)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_and_view_refresh_job_budget(spark, tmp_path):
+    """One apply path: lineage stats fold into one aggregate after the
+    single-shuffle write, and the view refresh classifies tombstones with
+    one join over the collected conv ids. A per-batch job count above the
+    budget is a regression even when the answer stays right."""
+    from couch_to_mongo_spark.gen import make_changes_df
+    from couch_to_mongo_spark.operators.cdf import ChangeFeedLog
+    from couch_to_mongo_spark.operators.corpus_view import RenderedCorpusView
+    from couch_to_mongo_spark.operators.merge import merge_batch, with_engine_schema
+    from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
+    from couch_to_mongo_spark.tableformat import LakeTable
+
+    pdf = make_changes_df(n_events=2000, n_convs=20, seed=5, delete_frac=0.1)
+    base = spark.createDataFrame(pdf.iloc[:1000])
+    batch = spark.createDataFrame(pdf.iloc[1000:])
+    budgets = [
+        ("fast", dict(collect_stats=False), MERGE_JOBS_FAST),
+        ("stats", dict(collect_stats=True), MERGE_JOBS_STATS),
+        ("cdf", dict(cdf=ChangeFeedLog(spark, str(tmp_path / "feed"))), MERGE_JOBS_CDF),
+    ]
+    for name, kw, budget in budgets:
+        table = LakeTable.create(
+            spark, str(tmp_path / name), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=4
+        )
+        merge_batch(table, base, run_id="r", batch_id=0, **kw)
+        n = _count_jobs(
+            spark, lambda: merge_batch(table, batch, run_id="r", batch_id=1, **kw)
+        )
+        assert n <= budget, (name, n, budget)
+
+    view = RenderedCorpusView(spark, table, str(tmp_path / "view"), n_buckets=2)
+    view.refresh(base.select("conv_id"), seq=999, run_id="r", batch_id=0)
+    n = _count_jobs(
+        spark, lambda: view.refresh(batch.select("conv_id"), seq=1999, run_id="r", batch_id=1)
+    )
+    assert n <= REFRESH_JOBS, (n, REFRESH_JOBS)

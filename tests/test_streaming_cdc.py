@@ -104,3 +104,30 @@ def test_since_seq_override(spark, tmp_path):
     out = read_state(pipe.table).toPandas()
     exp = expected_state(pdf[pdf.seq > 999])
     assert_state_parity(out, exp)
+
+
+def test_maintenance_error_fails_the_next_batch(spark, tmp_path, monkeypatch):
+    """A forever tail never reaches finish_maintenance(): a failed
+    background compaction must fail the NEXT batch, before it applies
+    anything, and be raised once."""
+    from couch_to_mongo_spark.operators import compact as compact_mod
+
+    def broken_compact(*args, **kwargs):
+        raise RuntimeError("injected compaction failure")
+
+    monkeypatch.setattr(compact_mod, "compact", broken_compact)
+    pdf = make_changes_df(n_events=400, n_convs=8, seed=29)
+    first, second = pdf.iloc[:200], pdf.iloc[200:]
+    pipe = run_pipeline(spark, tmp_path, normalize=False, compact_threshold=1)
+
+    pipe.process_batch(spark.createDataFrame(first), 0)
+    pipe._compact_thread.join()
+    with pytest.raises(RuntimeError, match="injected compaction failure"):
+        pipe.process_batch(spark.createDataFrame(second), 1)
+    assert not pipe.table.is_batch_committed(pipe.run_id, 1)
+
+    # the stream's replay of the batch applies
+    pipe.process_batch(spark.createDataFrame(second), 1)
+    assert pipe.table.is_batch_committed(pipe.run_id, 1)
+    pipe._compact_thread.join()
+    assert_state_parity(read_state(pipe.table).toPandas(), expected_state(pdf, normalize=False))
