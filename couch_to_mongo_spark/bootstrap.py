@@ -25,9 +25,11 @@ from couch_to_mongo_spark.functions.normalize import normalize_text
 from couch_to_mongo_spark.operators.dedup import lww_dedup
 from couch_to_mongo_spark.operators.merge import (
     DELETED_COL,
+    KEY_COLS,
     REV_COL,
     SEQ_COL,
     MergeResult,
+    _footer_seq_stats,
     with_engine_schema,
 )
 from couch_to_mongo_spark.operators.schema_evolution import align_to_schema
@@ -41,7 +43,6 @@ def bulk_bootstrap(
     spark: SparkSession,
     table_path: str,
     source_df: DataFrame,
-    key_cols: list[str] | None = None,
     n_buckets: int = 16,
     run_id: str = "bootstrap",
     order_cols: list[str] | None = None,
@@ -49,8 +50,9 @@ def bulk_bootstrap(
     seq_floor: int = -1,
     files_per_bucket: int = 1,
 ) -> tuple[LakeTable, MergeResult]:
-    """Copy a full source snapshot into a fresh table (one commit)."""
-    key_cols = key_cols or ["conv_id", "turn_idx"]
+    """Copy a full source snapshot into a fresh table (one commit).
+    ``files_per_bucket > 1`` splits each bucket's copy across that many
+    files, so one hot bucket is written by several tasks."""
     payload_schema = source_df.schema
     table = LakeTable.create(
         spark, table_path, with_engine_schema(payload_schema), n_buckets=n_buckets
@@ -64,32 +66,30 @@ def bulk_bootstrap(
     # defensive dedup: source snapshots can overlap at range boundaries
     # (the reference's boundary-overlap dedup, Couch.java:320-341 / P4)
     if order_cols is None:
-        order_cols = [c for c in ("ts",) if c in df.columns] or key_cols[:1]
-    df = lww_dedup(df, key_cols, order_cols)
+        order_cols = [c for c in ("ts",) if c in df.columns] or [KEY_COLS[0]]
+    df = lww_dedup(df, list(KEY_COLS), order_cols)
     df = (
         df.withColumn(SEQ_COL, F.lit(seq_floor).cast("long"))
         .withColumn(REV_COL, F.lit("0-bootstrap"))
         .withColumn(DELETED_COL, F.lit(False))
     )
     df = align_to_schema(df, table.snapshot().schema)
-    df = df.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
+    df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets))
     n_parts = n_buckets * max(files_per_bucket, 1)
     if files_per_bucket > 1:
         # Salt hash seeded independently of the bucket hash (extra literal
         # arg): pmod(h, n_buckets) and pmod(h, files_per_bucket) of the SAME
         # h are congruent whenever files_per_bucket divides n_buckets, which
-        # leaves hot buckets unsplit (matches dedup.py bucket_partitioned_lww).
+        # leaves hot buckets unsplit.
         df = df.repartition(
             n_parts,
             F.col(BUCKET_COL),
-            F.pmod(F.xxhash64(F.col(key_cols[0]), F.lit(1)), F.lit(files_per_bucket)),
+            F.pmod(F.xxhash64(F.col(KEY_COLS[0]), F.lit(1)), F.lit(files_per_bucket)),
         )
     else:
         df = df.repartition(n_parts, F.col(BUCKET_COL))
 
     new_files = table.write_bucketed(df, snapshot_hint="s00000001", n_buckets=n_buckets)
-    from couch_to_mongo_spark.operators.merge import _footer_seq_stats
-
     n_rows, _, _, per_file = _footer_seq_stats(table, new_files)
     n_rows = int(n_rows)
     result = MergeResult(

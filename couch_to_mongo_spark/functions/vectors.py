@@ -112,7 +112,7 @@ def _make_blas_pair_kernel(
         m = cs >= threshold
         return pd.DataFrame(
             {
-                "lbl": np.repeat(np.int64(pdf[label_col].iloc[0]), int(m.sum())),
+                "lbl": np.repeat(pdf[label_col].to_numpy()[:1], int(m.sum())),
                 "id_a": ids[ia[m]],
                 "id_b": ids[ib[m]],
                 "cos_sim": cs[m],

@@ -36,6 +36,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from couch_to_mongo_spark.operators.merge import (
+    DELETED_COL,
+    KEY_COLS,
+    REV_COL,
+    SEQ_COL,
+    lww_order,
+)
+
 CHANGE_TYPE_COL = "_change_type"
 CDF_META_COLS = (CHANGE_TYPE_COL, "_run_id", "_batch_id")
 
@@ -80,8 +88,6 @@ class ChangeFeedLog:
                 table = None
             if table is not None:
                 from pyspark.sql import types as T
-
-                from couch_to_mongo_spark.operators.merge import DELETED_COL
 
                 fields = [
                     f
@@ -174,13 +180,8 @@ def feed_as_stream(
 def classify_changes(
     batch: DataFrame,
     existing_winners: DataFrame,
-    key_cols: list[str],
-    deleted_col: str,
-    payload_cols: list[str],
     run_id: str,
     batch_id: int,
-    seq_col: str = "_seq",
-    rev_col: str = "_rev",
 ) -> tuple[DataFrame, DataFrame]:
     """Build the CDF rows for one merged batch. Returns ``(changes,
     cache)`` — the caller MUST unpersist ``cache`` after writing: the four
@@ -189,13 +190,15 @@ def classify_changes(
     bucket scan + window dedup (the repo's exchange-reuse rule: one
     materialization, many consumers).
 
-    ``batch``: LWW-deduped batch rows (one per key, tombstones included).
+    ``batch``: LWW-deduped batch rows (one per key, tombstones included)
+    in the table schema; the feed rows carry its columns.
     ``existing_winners``: LWW-RESOLVED pre-state of the touched buckets,
     tombstone winners INCLUDED (full payload + the deleted flag).
 
     Emits (Delta CDF semantics), ONLY for batch rows that actually WIN the
     LWW against the resolved pre-state — a redelivered or out-of-order row
-    whose (seq, rev_gen, _rev) does not exceed the winner changes nothing
+    whose :func:`~couch_to_mongo_spark.operators.merge.lww_order` key
+    does not exceed the winner's changes nothing
     in the table, so it must emit nothing in the feed (otherwise a replay
     under a new run_id would append stale post-images and a feed consumer
     would diverge from the table). Comparing against the RESOLVED winner
@@ -213,42 +216,27 @@ def classify_changes(
     pre-image's stamp the two tie and file order picks the winner.
     A tombstone over an absent/already-dead key is a state no-op and emits
     nothing (same rule as the n_deletes stat)."""
-    from couch_to_mongo_spark.operators.dedup import with_rev_gen
+    cols = [c for c in batch.columns if c != DELETED_COL]
+    is_del = F.coalesce(F.col(DELETED_COL), F.lit(False))
 
-    cols = [c for c in payload_cols if c != deleted_col]
-    is_del = F.coalesce(F.col(deleted_col), F.lit(False))
-
-    wb = with_rev_gen(batch, rev_col=rev_col)
-    we = with_rev_gen(existing_winners, rev_col=rev_col)
-    ex = we.select(
-        *key_cols,
-        F.col("rev_gen").alias("_pre_rev_gen"),
-        F.col(deleted_col).alias("_pre_del"),
-        *[F.col(c).alias(f"_pre_{c}") for c in cols if c not in key_cols],
+    ex = existing_winners.select(
+        *KEY_COLS,
+        F.struct(*lww_order()).alias("_pre_order"),
+        F.col(DELETED_COL).alias("_pre_del"),
+        *[F.col(c).alias(f"_pre_{c}") for c in cols if c not in KEY_COLS],
     ).withColumn("_m", F.lit(1))
-    j = wb.join(ex, key_cols, "left").persist()
+    j = batch.join(ex, list(KEY_COLS), "left").persist()
     matched = F.col("_m").isNotNull()
     pre_live = matched & ~F.coalesce(F.col("_pre_del"), F.lit(False))
-
-    def _ord(seq, gen, rev):
-        # null-safe LWW ordering tuple (matches the dedup kernel's
-        # [seq, rev_gen, rev] descending sort)
-        return F.struct(
-            F.col(seq).alias("s"),
-            F.coalesce(F.col(gen), F.lit(-1)).alias("g"),
-            F.coalesce(F.col(rev), F.lit("")).alias("r"),
-        )
-
-    wins = ~matched | (
-        _ord(seq_col, "rev_gen", rev_col)
-        > _ord(f"_pre_{seq_col}", "_pre_rev_gen", f"_pre_{rev_col}")
-    )
+    # both sides are structs of the same lww_order, so they compare field
+    # by field exactly as the dedup kernels rank rows (null lowest)
+    wins = ~matched | (F.struct(*lww_order()) > F.col("_pre_order"))
 
     def image(df, change_type, pre_cols=()):
-        sel = list(key_cols) + [
+        sel = list(KEY_COLS) + [
             (F.col(f"_pre_{c}") if c in pre_cols else F.col(c)).alias(c)
             for c in cols
-            if c not in key_cols
+            if c not in KEY_COLS
         ]
         return df.select(*sel).withColumn(CHANGE_TYPE_COL, F.lit(change_type))
 
@@ -257,7 +245,7 @@ def classify_changes(
     upd_post = image(j.where(~is_del & wins & pre_live), "update_postimage")
     upd_pre = image(j.where(~is_del & wins & pre_live), "update_preimage", before)
     deletes = image(
-        j.where(is_del & wins & pre_live), "delete", before - {seq_col, rev_col}
+        j.where(is_del & wins & pre_live), "delete", before - {SEQ_COL, REV_COL}
     )
 
     out = inserts.unionByName(upd_pre).unionByName(upd_post).unionByName(deletes)

@@ -6,6 +6,11 @@ batches — each bucket is rewritten once per ``max_files_per_bucket``
 batches instead of once per batch, so total write amplification is
 O(table / threshold) per batch on average.
 
+Every rewritten file is key-ordered (:func:`bucket_sorted`). MOR delta
+files stay write-order (append latency first); compaction is where the
+table earns its read layout — the same split Iceberg makes with its
+sort-order spec applying to rewrites.
+
 Tombstones survive compaction by default (an out-of-order replay of an
 old update must still lose to the tombstone); ``purge_tombstones=True``
 drops them — safe once no replayable batch predates the tombstone seq
@@ -15,35 +20,50 @@ delete-file retention rules.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from couch_to_mongo_spark.operators.dedup import lww_dedup, with_rev_gen
-from couch_to_mongo_spark.operators.merge import DELETED_COL, REV_COL, SEQ_COL
+from couch_to_mongo_spark.operators.merge import (
+    DELETED_COL,
+    KEY_COLS,
+    _footer_seq_stats,
+    resolve,
+)
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
+
+
+def bucket_sorted(df: DataFrame, n_buckets: int, n_parts: int) -> DataFrame:
+    """Route resolved rows to their bucket and key-order them inside it —
+    the layout every whole-bucket rewrite (compaction, rescale) writes.
+
+    The sort is ``sortWithinPartitions``, a NARROW op on the partitions the
+    rewrite already owns, so it adds zero shuffles. Payoff at scale:
+    parquet row-group min/max stats on the key become tight instead of
+    whole-file-wide, so point lookups and key-range scans skip row groups
+    inside the pruned bucket (the scan-time twin of the bucket pruning the
+    table already does), and runs of equal conv_id compress better.
+
+    BUCKET_COL leads the sort key: the dynamic-partition writer REQUIRES
+    ordering on the partition column, and if our outputOrdering doesn't
+    provide it Spark adds its own SortExec on _bucket — which is NOT stable
+    under spill, so a big rewrite would silently lose the key order.
+    Leading with _bucket satisfies the writer's required ordering
+    structurally (no extra sort inserted)."""
+    df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets))
+    return df.repartition(n_parts, F.col(BUCKET_COL)).sortWithinPartitions(
+        BUCKET_COL, *KEY_COLS
+    )
 
 
 def compact(
     table: LakeTable,
     max_files_per_bucket: int = 8,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     purge_tombstones: bool = False,
     buckets: list[int] | None = None,
-    sort_within_bucket: bool = True,
 ) -> dict:
     """Rewrite every bucket holding more than ``max_files_per_bucket``
-    files to a single LWW-resolved file. Returns {bucket: n_files_before}.
-
-    ``sort_within_bucket`` (default on) key-orders each rewritten file via
-    ``sortWithinPartitions`` — a NARROW op on the partitions the rewrite
-    already owns, so it adds zero shuffles. Payoff at scale: parquet
-    row-group min/max stats on (conv_id, turn_idx) become tight instead of
-    whole-file-wide, so point lookups and key-range scans skip row groups
-    inside the pruned bucket (the scan-time twin of the bucket pruning the
-    table already does), and runs of equal conv_id compress better. MOR
-    delta files stay write-order (append latency first); compaction is
-    where the table earns its read layout — the same split Iceberg makes
-    with its sort-order spec applying to rewrites.
-    """
+    files to a single LWW-resolved, key-sorted file. Returns
+    {bucket: n_files_before}."""
     snap = table.snapshot()
     if buckets is None:
         buckets = [
@@ -53,23 +73,10 @@ def compact(
         return {}
     before = {b: len(snap.files.get(str(b), [])) for b in buckets}
 
-    df = table.read_buckets(buckets)
-    key_cols = [c for c in key_cols if c in df.columns]
-    df = with_rev_gen(df, rev_col=REV_COL)
-    df = lww_dedup(df, key_cols, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+    df = resolve(table.read_buckets(buckets), live_only=False)
     if purge_tombstones:
         df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-    df = df.withColumn(BUCKET_COL, bucket_expr(key_cols[0], snap.n_buckets))
-    df = df.repartition(len(buckets), F.col(BUCKET_COL))
-    if sort_within_bucket:
-        # narrow (per-partition) sort. BUCKET_COL leads the sort key: the
-        # dynamic-partition writer REQUIRES ordering on the partition
-        # column, and if our outputOrdering doesn't provide it Spark adds
-        # its own SortExec on _bucket — which is NOT stable under spill,
-        # so a big compaction would silently lose the key order this
-        # feature exists for. Leading with _bucket satisfies the writer's
-        # required ordering structurally (no extra sort inserted).
-        df = df.sortWithinPartitions(BUCKET_COL, *key_cols)
+    df = bucket_sorted(df, snap.n_buckets, len(buckets))
 
     new_files = table.write_bucketed(
         df, snapshot_hint=f"c{snap.version + 1:08d}", n_buckets=snap.n_buckets
@@ -77,8 +84,6 @@ def compact(
     # rewrite-files commit: replace exactly the files we folded; delta files
     # appended by a concurrent merge since `snap` survive the rewrite (the
     # commit rebases on CommitConflict) — Iceberg's RewriteFiles semantics.
-    from couch_to_mongo_spark.operators.merge import _footer_seq_stats
-
     _, _, _, per_file = _footer_seq_stats(table, new_files)
     replaced = {f for b in buckets for f in snap.files.get(str(b), [])}
     table.commit(

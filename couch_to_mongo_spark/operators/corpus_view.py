@@ -31,6 +31,7 @@ from couch_to_mongo_spark.operators.merge import (
     MergeResult,
     merge_batch,
     read_state,
+    resolve,
     with_engine_schema,
 )
 from couch_to_mongo_spark.tableformat import LakeTable, bucket_expr
@@ -48,10 +49,10 @@ VIEW_SCHEMA = T.StructType(
 
 class RenderedCorpusView:
     """Maintains ``view`` (a LakeTable of one rendered doc per
-    conversation) from a primary transcript table, one CDC batch at a
-    time. ``render_opts`` pass through to
+    conversation, rendered by
     :func:`~couch_to_mongo_spark.functions.transcripts.render_conversations`
-    (role_col / sep / max_turns / keep)."""
+    with its defaults) from a primary transcript table, one CDC batch at a
+    time."""
 
     def __init__(
         self,
@@ -59,14 +60,12 @@ class RenderedCorpusView:
         primary: LakeTable,
         view_path: str,
         n_buckets: int = 16,
-        **render_opts,
     ):
         self.spark = spark
         self.primary = primary
         self.view = LakeTable.create(
             spark, view_path, with_engine_schema(VIEW_SCHEMA), n_buckets=n_buckets
         )
-        self.render_opts = render_opts
 
     # -- incremental refresh ------------------------------------------
 
@@ -160,8 +159,7 @@ class RenderedCorpusView:
         else:
             build = F.broadcast(convs) if broadcast_convs else convs
             raw = raw.join(build, "conv_id", "left_semi")
-        live = resolve_live_state(raw)
-        rendered = render_conversations(live, **self.render_opts)
+        rendered = render_conversations(resolve(raw))
         # ONE left join classifies every changed conv: with live turns it
         # gets its rendered doc, with none (fully tombstoned) a delete row
         return convs.join(
@@ -291,33 +289,3 @@ class RenderedCorpusView:
             "conv_id", "n_turns", "n_chars", F.col("text").alias("doc")
         )
 
-
-def resolve_live_state(df: DataFrame) -> DataFrame:
-    """LWW fold + tombstone elimination over raw MOR rows — the shared
-    resolution kernel of :func:`read_state_of_buckets` and the refresh's
-    filter-below-the-fold path. Any per-conv pre-filter composes safely:
-    LWW is per (conv_id, turn_idx) key, so dropping whole conversations
-    before the fold cannot change any surviving key's winner."""
-    from couch_to_mongo_spark.operators.dedup import lww_dedup, with_rev_gen
-    from couch_to_mongo_spark.operators.merge import (
-        DELETED_COL,
-        ENGINE_COLS,
-        REV_COL,
-        SEQ_COL,
-    )
-
-    key_cols = [c for c in ("conv_id", "turn_idx") if c in df.columns]
-    if SEQ_COL in df.columns and key_cols:
-        df = with_rev_gen(df, rev_col=REV_COL)
-        df = lww_dedup(df, key_cols, [SEQ_COL, "rev_gen", REV_COL])
-        df = df.drop("rev_gen")
-    if DELETED_COL in df.columns:
-        df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-    return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
-
-
-def read_state_of_buckets(table: LakeTable, buckets: list[int]) -> DataFrame:
-    """LWW-resolved live state of just the given buckets — the
-    partition-pruned analogue of :func:`read_state` (same resolution,
-    O(requested buckets) metadata + scan)."""
-    return resolve_live_state(table.read_buckets(buckets))

@@ -4,9 +4,11 @@ The reference coalesces many changes to one doc within a poll into one id
 (Set) and re-fetches the winning revision — last-writer-wins per key per
 batch (reference: ChangeFeedClient.java:136-150, 104-113). Our rendering:
 one row per ``(conv_id, turn_idx)`` ordered by ``(seq, rev generation,
-rev hash)`` descending.
+rev hash)`` descending. The engine's key and order are defined once, in
+operators/merge.py (``KEY_COLS``, ``lww_order``); the kernels here take
+them as arguments.
 
-Three implementations, all deterministic and equivalent:
+Four implementations, all deterministic and equivalent:
 
 - :func:`lww_dedup` — ``max_by(struct(payload), struct(order))`` hash
   aggregation. **The default.** Spark's hash aggregate does map-side
@@ -21,45 +23,49 @@ Three implementations, all deterministic and equivalent:
   by ...desc) = 1``. Readable, but shuffles every duplicate row to one
   partition per key — kept for small-data parity tests and as the oracle
   shape (DuckDB window).
+- :func:`bucket_partitioned_lww` — the same window on a table-bucket
+  repartition, so the merge's dedup and its bucketed write share one
+  shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_rev_gen(df: DataFrame, rev_col: str = "_rev", out_col: str = "rev_gen") -> DataFrame:
-    """Parse CouchDB-style ``N-hash`` revision into its integer generation.
+def rev_gen(rev: "str | Column") -> Column:
+    """The integer generation of a CouchDB-style ``N-hash`` revision; 0
+    when the revision is null or unparsable.
 
     Reference delegates conflict resolution to CouchDB and reads the winner
     (SURVEY.md §2.9 C4); we make the ordering explicit: generation then hash.
     """
-    return df.withColumn(
-        out_col,
-        F.coalesce(F.split(F.col(rev_col), "-").getItem(0).cast("long"), F.lit(0)),
-    )
+    return F.coalesce(F.split(rev, "-").getItem(0).cast("long"), F.lit(0))
 
 
-def _order_struct(order_cols: list[str]):
-    return F.struct(*[F.col(c) for c in order_cols])
+def with_rev_gen(df: DataFrame, rev_col: str = "_rev", out_col: str = "rev_gen") -> DataFrame:
+    """``df`` plus the revision generation as a column."""
+    return df.withColumn(out_col, rev_gen(rev_col))
 
 
 def lww_dedup(
     df: DataFrame,
     key_cols: list[str],
-    order_cols: list[str],
+    order_cols: "list[str | Column]",
 ) -> DataFrame:
-    """One row per key: the row with the max ``order_cols`` tuple.
+    """One row per key: the row with the max ``order_cols`` tuple (column
+    names or expressions).
 
     ``max_by(struct(<all cols>), struct(<order cols>))`` — structs compare
     lexicographically field-by-field, so the ordering is total as long as
-    ``order_cols`` ends in a tiebreaker (we use seq, rev_gen, _rev; seq is
-    globally unique so ties cannot occur in practice).
+    ``order_cols`` ends in a tiebreaker (the engine's order ends in the
+    revision string; seq is globally unique so ties cannot occur in
+    practice).
     """
     payload = [c for c in df.columns]
     agg = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*payload).alias("_p"), _order_struct(order_cols)).alias("_w")
+        F.max_by(F.struct(*payload).alias("_p"), F.struct(*order_cols)).alias("_w")
     )
     return agg.select(*[F.col(f"_w.{c}").alias(c) for c in payload])
 
@@ -83,7 +89,7 @@ def salted_lww(
     phase1 = (
         salted.repartition(*[F.col(c) for c in key_cols], F.col("_salt"))
         .groupBy(*key_cols, "_salt")
-        .agg(F.max_by(F.struct(*payload), _order_struct(order_cols)).alias("_w"))
+        .agg(F.max_by(F.struct(*payload), F.struct(*order_cols)).alias("_w"))
         .select(*key_cols, "_w")
     )
     phase2 = phase1.groupBy(*key_cols).agg(
@@ -105,52 +111,30 @@ def lww_dedup_window(
         .drop("_rn")
     )
 
+
 def bucket_partitioned_lww(
     df: DataFrame,
     key_cols: list[str],
-    order_cols: list[str],
+    order: list[Column],
     n_buckets: int,
-    files_per_bucket: int = 1,
-    bucket_key: str | None = None,
 ) -> DataFrame:
-    """Single-shuffle LWW for the MOR fast path: repartition by
-    ``(bucket[, salt])`` FIRST, then dedup with a window whose partitionBy
-    is a superset of the partition keys — Catalyst plans the window with
-    NO further exchange (Sort + WindowGroupLimit prune losers in place),
-    and a bucket-partitioned write downstream streams straight out of the
-    same partitions. Exactly one full-payload shuffle end to end
+    """Single-shuffle LWW for the merge write path: repartition by table
+    bucket FIRST, then dedup with a window whose partitionBy is a superset
+    of the partition key — Catalyst plans the window with NO further
+    exchange (Sort + WindowGroupLimit prune losers in place), and a
+    bucket-partitioned write downstream streams straight out of the same
+    partitions. Exactly one full-payload shuffle end to end
     (plan-asserted: tests/test_plans.py::test_fast_merge_single_shuffle).
+    The bucket is hashed from the first key column.
 
-    ``files_per_bucket > 1`` adds a key-derived salt column to the
-    partitioning (a real column, not a literal — literals break Catalyst's
-    partitioning-subset detection) so hot buckets split across writers
-    while each key's rows stay co-located. The salt hash is seeded
-    independently of the bucket hash (extra literal column in xxhash64):
-    ``pmod(h, n_buckets)`` and ``pmod(h, files_per_bucket)`` of the SAME h
-    are congruent whenever files_per_bucket divides n_buckets, which would
-    make the salt constant within a bucket and leave hot buckets unsplit.
-
-    Returns the deduped frame WITH the transient ``_bucket`` (and
-    ``_salt``) columns still attached.
+    Returns the deduped frame WITH the transient ``_bucket`` column still
+    attached.
     """
     from couch_to_mongo_spark.tableformat import BUCKET_COL, bucket_expr
 
-    bucket_key = bucket_key or key_cols[0]
-    n_parts = n_buckets * max(files_per_bucket, 1)
-    b = df.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
-    part_cols = [BUCKET_COL]
-    if files_per_bucket > 1:
-        b = b.withColumn(
-            "_salt",
-            F.pmod(
-                F.xxhash64(F.col(bucket_key), F.lit(1)), F.lit(files_per_bucket)
-            ).cast("int"),
-        )
-        part_cols.append("_salt")
-    b = b.repartition(n_parts, *[F.col(c) for c in part_cols])
-    w = Window.partitionBy(*part_cols, *key_cols).orderBy(
-        *[F.col(c).desc() for c in order_cols]
-    )
+    b = df.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
+    b = b.repartition(n_buckets, F.col(BUCKET_COL))
+    w = Window.partitionBy(BUCKET_COL, *key_cols).orderBy(*[c.desc() for c in order])
     return (
         b.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)

@@ -24,6 +24,12 @@ rewrite of existing rows. Replaying any batch, in any order, reconverges
 to the same state; deletes are durable tombstones (purged by compaction),
 fixing the reference's delete-resurrection gap.
 
+This module owns that decision: ``KEY_COLS`` (the key), :func:`lww_order`
+(the winner order) and :func:`resolve` (LWW per key, then optionally the
+live rows only). The apply window, :func:`read_state`, the corpus-view
+refresh, compaction, rescale, the lineage stats and the change feed all
+call these three.
+
 Steps (one write path):
 1. one exchange: the batch is repartitioned by bucket ``pmod(xxhash64(
    conv_id), n_buckets)`` and LWW-deduped inside those partitions, so one
@@ -45,17 +51,13 @@ from __future__ import annotations
 
 import os
 from dataclasses import asdict, dataclass
-from typing import Any, Sequence
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from couch_to_mongo_spark.operators.dedup import (
-    bucket_partitioned_lww,
-    lww_dedup,
-    with_rev_gen,
-)
+from couch_to_mongo_spark.operators.dedup import bucket_partitioned_lww, lww_dedup, rev_gen
 from couch_to_mongo_spark.operators.poison import POISON_COL
 from couch_to_mongo_spark.operators.schema_evolution import align_to_schema, evolve_schema
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
@@ -66,7 +68,30 @@ REV_COL = "_rev"
 DELETED_COL = "_deleted"
 ENGINE_COLS = (SEQ_COL, REV_COL, DELETED_COL)
 # transient columns never persisted
-TRANSIENT_COLS = ("op", "seq", "rev_gen", "_salt", BUCKET_COL)
+TRANSIENT_COLS = ("op", "seq", BUCKET_COL)
+#: the engine key — the reference's ``_id`` (Mongo.java:115-187), per turn
+KEY_COLS = ("conv_id", "turn_idx")
+
+
+def lww_order(seq: str = SEQ_COL) -> list[Column]:
+    """The last-writer-wins order, highest wins: change seq (``seq`` names
+    it: ``seq`` in a change batch, ``_seq`` in the table), then the
+    revision generation (parsed inline by ``dedup.rev_gen``), then the
+    revision string as tiebreaker. A null revision ranks below every real
+    one."""
+    return [F.col(seq), rev_gen(REV_COL), F.col(REV_COL)]
+
+
+def resolve(df: DataFrame, live_only: bool = True) -> DataFrame:
+    """Merge-on-read resolution of raw delta rows: the :func:`lww_order`
+    winner per key, tombstones included. With ``live_only``, tombstone
+    winners and the engine columns are dropped — the public state. Any
+    pre-filter that keeps or drops whole keys composes safely: LWW is per
+    key, so it cannot change a surviving key's winner."""
+    df = lww_dedup(df, list(KEY_COLS), lww_order())
+    if not live_only:
+        return df
+    return df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(*ENGINE_COLS)
 
 
 def engine_fields() -> list[T.StructField]:
@@ -104,11 +129,6 @@ def merge_batch(
     batch_df: DataFrame,
     run_id: str,
     batch_id: int,
-    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-    op_col: str = "op",
-    seq_col: str = "seq",
-    rev_col: str = "_rev",
-    files_per_bucket: int = 1,
     collect_stats: bool = True,
     transform_after_dedup=None,
     dead_letter=None,
@@ -116,7 +136,8 @@ def merge_batch(
 ) -> MergeResult:
     """Apply one change batch to the table, exactly-once under replay.
 
-    ``batch_df`` columns: key_cols + op + seq + _rev + payload columns.
+    ``batch_df`` columns: ``KEY_COLS`` + op + seq + _rev (optional) +
+    payload columns.
 
     The LWW-deduped batch (tombstones included) is appended as per-bucket
     delta files — write cost O(batch), never O(table). Readers resolve
@@ -124,10 +145,11 @@ def merge_batch(
     compaction folds buckets back to one file.
 
     ``collect_stats`` fills the lineage counts: ``n_inserts`` /
-    ``n_updates`` / ``n_deletes`` classify each written row against the
-    LWW-resolved live pre-state of its key, and ``seq_min`` / ``seq_max``
-    are the raw SOURCE range (pre-dedup, poison rows included — the
-    analogue of the reference's per-doc sequence audit, Mongo.java:535).
+    ``n_updates`` / ``n_deletes`` classify each written row that outranks
+    the LWW-resolved pre-state of its key (the rows the change feed
+    emits), and ``seq_min`` / ``seq_max`` are the raw SOURCE range
+    (pre-dedup, poison rows included — the analogue of the reference's
+    per-doc sequence audit, Mongo.java:535).
     Without it, ``rows_applied`` / ``seq_min`` / ``seq_max`` are the
     written rows and their ``_seq`` range, read from the parquet footers
     at no Spark cost.
@@ -145,33 +167,26 @@ def merge_batch(
     # driver's per-batch manifest I/O is O(touched), not O(n_buckets)
     snap = table.snapshot(materialize=False)
     n_buckets = snap.n_buckets
-    key_cols = list(key_cols)
 
     # --- normalize batch to engine shape: _seq/_rev/_deleted + payload ---
     b = batch_df
-    if rev_col not in b.columns:
-        b = b.withColumn(rev_col, F.lit(None).cast("string"))
-    b = with_rev_gen(b, rev_col=rev_col)
+    if REV_COL not in b.columns:
+        b = b.withColumn(REV_COL, F.lit(None).cast("string"))
     # Single-shuffle apply. The ONE exchange is the bucket repartition,
-    # done FIRST; everything downstream reuses it: the partition keys are a
+    # done FIRST; everything downstream reuses it: the partition key is a
     # subset of the dedup window's partitionBy, so Catalyst plans the LWW
     # as Sort+WindowGroupLimit+Window with NO further exchange
     # (WindowGroupLimit prunes losers during the sort), and the
     # bucket-partitioned write streams straight out of the same partitions
-    # (one file per bucket x salt). The payload crosses the wire exactly
-    # once. Plan-asserted in tests/test_plans.py::test_fast_merge_single_shuffle.
-    b = bucket_partitioned_lww(
-        b, key_cols, [seq_col, "rev_gen", rev_col], n_buckets, files_per_bucket
-    )
+    # (one file per bucket). The payload crosses the wire exactly once.
+    # Plan-asserted in tests/test_plans.py::test_fast_merge_single_shuffle.
+    b = bucket_partitioned_lww(b, list(KEY_COLS), lww_order(seq="seq"), n_buckets)
     b, n_poison, poison_cache = _transform_and_quarantine(
         b, transform_after_dedup, dead_letter, run_id, batch_id
     )
-    b = (
-        b.withColumn(DELETED_COL, F.col(op_col) == F.lit("d"))
-        .withColumnRenamed(seq_col, SEQ_COL)
+    b = b.withColumn(DELETED_COL, F.col("op") == F.lit("d")).withColumnRenamed(
+        "seq", SEQ_COL
     )
-    if rev_col != REV_COL:
-        b = b.withColumnRenamed(rev_col, REV_COL)
     payload_fields = [
         f
         for f in b.schema.fields
@@ -180,11 +195,11 @@ def merge_batch(
     evolved = evolve_schema(
         snap.schema, with_engine_schema(T.StructType(payload_fields))
     )
-    # align drops the physical bucket/salt columns; the ROWS stay in their
+    # align drops the physical bucket column; the ROWS stay in their
     # bucket partitions (projections preserve partitioning), so the
-    # partitionBy write still emits one file per bucket x salt
+    # partitionBy write still emits one file per bucket
     new_rows = align_to_schema(b, evolved).withColumn(
-        BUCKET_COL, bucket_expr(key_cols[0], n_buckets)
+        BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets)
     )
     delta = table.write_bucketed(
         new_rows, snapshot_hint=f"s{snap.version + 1:08d}", n_buckets=n_buckets
@@ -211,9 +226,9 @@ def merge_batch(
         )
         pre = table.read_buckets(touched, version=snap.version)
         if cdf is not None:
-            _emit_changes(cdf, written, pre, evolved, key_cols, run_id, batch_id)
+            _emit_changes(cdf, written, pre, evolved, run_id, batch_id)
         if collect_stats:
-            _fold_stats(result, written, pre, batch_df, key_cols, seq_col)
+            _fold_stats(result, written, pre, batch_df)
     # append commit: rebases automatically under concurrent writers
     new_snap = table.commit(
         delta, touched, result.to_lineage(), new_schema=evolved,
@@ -224,7 +239,7 @@ def merge_batch(
     return result
 
 
-def _fold_stats(result, written, pre, batch_df, key_cols, seq_col) -> None:
+def _fold_stats(result, written, pre, batch_df) -> None:
     """Fill ``result``'s lineage counts and source seq range from ONE
     aggregate: the union of the pre-state (``_src`` 0), the written delta
     (1) and the raw batch (2), grouped by key, then folded to one row.
@@ -233,38 +248,43 @@ def _fold_stats(result, written, pre, batch_df, key_cols, seq_col) -> None:
     live (the RESOLVED winner is non-deleted, not "any version non-deleted":
     after delete-then-reinsert the reinsert is an insert, and a delete of
     an already-tombstoned key is not a delete); the written row (one per
-    key) says upsert or tombstone; the raw rows give the source seq range,
+    key) says upsert or tombstone, and counts only if it outranks that
+    winner — a redelivered or out-of-order row changes nothing, the same
+    rule the change feed applies; the raw rows give the source seq range,
     which is below the winners' range when a key repeats in the batch."""
-    eng = [*key_cols, SEQ_COL, REV_COL, DELETED_COL]
+    eng = [*KEY_COLS, SEQ_COL, REV_COL, DELETED_COL]
     u = (
         pre.select(*eng).withColumn("_src", F.lit(0))
         .unionByName(written.select(*eng).withColumn("_src", F.lit(1)))
         .unionByName(
-            batch_df.select(*key_cols, F.col(seq_col).alias(SEQ_COL))
+            batch_df.select(*KEY_COLS, F.col("seq").alias(SEQ_COL))
             .withColumn("_src", F.lit(2)),
             allowMissingColumns=True,
         )
     )
-    u = with_rev_gen(u, rev_col=REV_COL)
     src = F.col("_src")
-    per_key = u.groupBy(*key_cols).agg(
+    order = F.struct(*lww_order())
+    per_key = u.groupBy(*KEY_COLS).agg(
         F.max_by(
             F.when(src == 0, F.coalesce(F.col(DELETED_COL), F.lit(False))),
-            F.when(src == 0, F.struct(SEQ_COL, "rev_gen", REV_COL)),
+            F.when(src == 0, order),
         ).alias("pre_dead"),
+        F.max(F.when(src == 0, order)).alias("pre_order"),
+        F.max(F.when(src == 1, order)).alias("new_order"),
         F.max(F.when(src == 1, F.col(DELETED_COL))).alias("new_dead"),
         F.min(F.when(src == 2, F.col(SEQ_COL))).alias("lo"),
         F.max(F.when(src == 2, F.col(SEQ_COL))).alias("hi"),
     )
     # a key with no pre-state row has a null pre_dead: not live
     pre_live = F.coalesce(~F.col("pre_dead"), F.lit(False))
-    new_dead = F.col("new_dead")
+    wins = F.col("pre_order").isNull() | (F.col("new_order") > F.col("pre_order"))
+    upsert = ~F.col("new_dead") & wins
     row = per_key.agg(
         F.min("lo").alias("seq_min"),
         F.max("hi").alias("seq_max"),
-        F.count(F.when(~new_dead & ~pre_live, 1)).alias("n_inserts"),
-        F.count(F.when(~new_dead & pre_live, 1)).alias("n_updates"),
-        F.count(F.when(new_dead & pre_live, 1)).alias("n_deletes"),
+        F.count(F.when(upsert & ~pre_live, 1)).alias("n_inserts"),
+        F.count(F.when(upsert & pre_live, 1)).alias("n_updates"),
+        F.count(F.when(F.col("new_dead") & wins & pre_live, 1)).alias("n_deletes"),
     ).collect()[0]
     result.n_inserts = row["n_inserts"]
     result.n_updates = row["n_updates"]
@@ -273,7 +293,7 @@ def _fold_stats(result, written, pre, batch_df, key_cols, seq_col) -> None:
     result.seq_min, result.seq_max = row["seq_min"], row["seq_max"]
 
 
-def _emit_changes(cdf, written, pre, evolved, key_cols, run_id, batch_id) -> None:
+def _emit_changes(cdf, written, pre, evolved, run_id, batch_id) -> None:
     """Classify the written delta against the LWW-resolved full-width
     pre-state (tombstone winners included, see classify_changes) and
     write this batch's change-feed rows. Written BEFORE the commit to a
@@ -282,40 +302,17 @@ def _emit_changes(cdf, written, pre, evolved, key_cols, run_id, batch_id) -> Non
     by fence-aware reads (ChangeFeedLog.read committed_only)."""
     from couch_to_mongo_spark.operators.cdf import classify_changes
 
-    ex = with_rev_gen(align_to_schema(pre, evolved), rev_col=REV_COL)
-    ex = lww_dedup(ex, key_cols, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
-    changes, cache = classify_changes(
-        written,
-        ex,
-        key_cols,
-        DELETED_COL,
-        [f.name for f in evolved.fields],
-        run_id,
-        batch_id,
-    )
+    ex = resolve(align_to_schema(pre, evolved), live_only=False)
+    changes, cache = classify_changes(written, ex, run_id, batch_id)
     cdf.append(changes, run_id, batch_id)
     cache.unpersist()
 
 
-def read_state(
-    table: LakeTable,
-    version: int | None = None,
-    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-) -> DataFrame:
-    """The logical (public) table state: live rows, payload columns only.
-
-    Merge-on-read resolution: LWW over (_seq, rev_gen, _rev) collapses the
-    multi-version delta rows; tombstone winners are then dropped. On a
-    compacted table the dedup is a no-op pass."""
-    df = table.read(version)
-    key_cols = [c for c in key_cols if c in df.columns]
-    if SEQ_COL in df.columns and key_cols:
-        df = with_rev_gen(df, rev_col=REV_COL)
-        df = lww_dedup(df, key_cols, [SEQ_COL, "rev_gen", REV_COL])
-        df = df.drop("rev_gen")
-    if DELETED_COL in df.columns:
-        df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-    return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
+def read_state(table: LakeTable, version: int | None = None) -> DataFrame:
+    """The logical (public) table state: live rows, payload columns only —
+    :func:`resolve` over every delta row of the snapshot. On a compacted
+    table the dedup is a no-op pass."""
+    return resolve(table.read(version))
 
 
 def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, batch_id):
@@ -337,10 +334,8 @@ def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, bat
                 f"transform produced {POISON_COL} but no dead_letter log given"
             )
         poison_cache = b.persist()
-        # the physical bucket/salt columns are write routing, not audit data
-        poison = poison_cache.where(F.col(POISON_COL).isNotNull()).drop(
-            BUCKET_COL, "_salt"
-        )
+        # the physical bucket column is write routing, not audit data
+        poison = poison_cache.where(F.col(POISON_COL).isNotNull()).drop(BUCKET_COL)
         n_poison = dead_letter.append(poison, run_id, batch_id)
         b = poison_cache.where(F.col(POISON_COL).isNull()).drop(POISON_COL)
     return b, n_poison, poison_cache

@@ -17,9 +17,10 @@ atomic strict-replace commit:
   raises CommitConflict (its rows would otherwise be lost in the re-key),
   and the caller re-runs — the safety rule of every strict-replace commit.
 
-The rewrite itself folds multi-version MOR deltas with the same LWW kernel
-compaction uses (tombstones kept — out-of-order replays must still lose to
-them), so the rescaled table starts compact. Cost is one table-sized
+The rewrite itself folds multi-version MOR deltas with the same
+resolution and key-sorted layout compaction uses (tombstones kept —
+out-of-order replays must still lose to them), so the rescaled table
+starts compact. Cost is one table-sized
 shuffle — O(data), amortized over the months the new layout serves; at
 100 TB you run it as a dedicated job, not inside the ingest loop.
 
@@ -30,37 +31,21 @@ migration; rescale is part of the lakehouse operational surface above it.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from couch_to_mongo_spark.operators.dedup import lww_dedup, with_rev_gen
-from couch_to_mongo_spark.operators.merge import REV_COL, SEQ_COL, _footer_seq_stats
-from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
+from couch_to_mongo_spark.operators.compact import bucket_sorted
+from couch_to_mongo_spark.operators.merge import _footer_seq_stats, resolve
+from couch_to_mongo_spark.tableformat import LakeTable
 
 __all__ = ["rescale_buckets"]
 
 
-def rescale_buckets(
-    table: LakeTable,
-    new_n_buckets: int,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    sort_within_bucket: bool = True,
-) -> dict:
+def rescale_buckets(table: LakeTable, new_n_buckets: int) -> dict:
     """Rewrite the whole table into ``new_n_buckets`` hash buckets in one
     atomic strict-replace commit. Returns {"old_n_buckets", "new_n_buckets",
     "rows"}. Raises CommitConflict if anything commits concurrently."""
     snap = table.snapshot()
     old_n = snap.n_buckets
-    df = table.read(version=snap.version)
-    keys = [c for c in key_cols if c in df.columns]
-    df = with_rev_gen(df, rev_col=REV_COL)
-    df = lww_dedup(df, keys, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
-    df = df.withColumn(BUCKET_COL, bucket_expr(keys[0], new_n_buckets))
-    df = df.repartition(new_n_buckets, F.col(BUCKET_COL))
-    if sort_within_bucket:
-        # _bucket leads: satisfies the partitioned writer's required
-        # ordering so no (spill-unstable) extra SortExec is inserted —
-        # see operators/compact.py
-        df = df.sortWithinPartitions(BUCKET_COL, *keys)
+    df = resolve(table.read(version=snap.version), live_only=False)
+    df = bucket_sorted(df, new_n_buckets, new_n_buckets)
 
     new_files = table.write_bucketed(
         df, snapshot_hint=f"r{snap.version + 1:08d}", n_buckets=new_n_buckets

@@ -36,5 +36,3 @@ EVOLVED_EXTRA_FIELDS = [
     T.StructField("metadata", T.StringType(), True),
     T.StructField("tool_args", T.StringType(), True),
 ]
-
-KEY_COLS = ["conv_id", "turn_idx"]

@@ -90,7 +90,6 @@ class CdcPipeline:
         max_files_per_trigger: int | None = None,
         normalize: bool = True,
         since_seq: int | None = None,
-        files_per_bucket: int = 1,
         collect_stats: bool = True,
         compact_threshold: int = 8,
         compact_async: bool = True,
@@ -98,7 +97,6 @@ class CdcPipeline:
         transform_kernel=None,
         emit_cdf: bool = False,
         maintain_view: str | None = None,
-        view_render_opts: dict | None = None,
         view_refresh_every: int = 1,
         retention_keep_last: int | None = None,
         retention_every: int = 50,
@@ -111,7 +109,6 @@ class CdcPipeline:
         self.max_files_per_trigger = max_files_per_trigger
         self.normalize = normalize
         self.since_seq = since_seq
-        self.files_per_bucket = files_per_bucket
         self.collect_stats = collect_stats
         self.compact_threshold = compact_threshold
         self.compact_async = compact_async
@@ -181,11 +178,7 @@ class CdcPipeline:
             )
 
             self.view = RenderedCorpusView(
-                spark,
-                self.table,
-                maintain_view,
-                n_buckets=n_buckets,
-                **(view_render_opts or {}),
+                spark, self.table, maintain_view, n_buckets=n_buckets
             )
         self.lineage = LineageLog(os.path.join(table_path, "_lineage"))
         self.feed_schema: T.StructType | None = None
@@ -244,7 +237,6 @@ class CdcPipeline:
             batch_df,
             run_id=self.run_id,
             batch_id=batch_id,
-            files_per_bucket=self.files_per_bucket,
             collect_stats=self.collect_stats,
             transform_after_dedup=transform,
             dead_letter=self.dead_letter,

@@ -428,7 +428,6 @@ class LakeTable:
     def read(
         self,
         version: int | None = None,
-        with_bucket: bool = False,
         min_seq: int | None = None,
         as_of: float | None = None,
         min_seq_rows: bool = True,
@@ -466,9 +465,6 @@ class LakeTable:
             df = self.spark.read.schema(snap.schema).parquet(*files)
         if min_seq is not None and min_seq_rows and "_seq" in df.columns:
             df = df.where(F.col("_seq") >= F.lit(min_seq))
-        if with_bucket:
-            key = snap.lineage.get("bucket_key") or self.bucket_key()
-            df = df.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
         return df
 
     @staticmethod
@@ -558,9 +554,6 @@ class LakeTable:
         if not files:
             return self.spark.createDataFrame([], snap.schema)
         return self.spark.read.schema(snap.schema).parquet(*files)
-
-    def bucket_key(self) -> str:
-        return "conv_id"
 
     # ---------------- write / commit ----------------
 
@@ -783,7 +776,7 @@ class LakeTable:
         return sorted(deleted)
 
     def write_bucketed(
-        self, df: DataFrame, snapshot_hint: str, n_buckets: int, bucket_col: str = BUCKET_COL
+        self, df: DataFrame, snapshot_hint: str, n_buckets: int
     ) -> dict[int, list[str]]:
         """Write df as per-bucket parquet under data/<snapshot_hint>-<uuid>/
         and return {bucket: [relative paths]}.
@@ -799,13 +792,13 @@ class LakeTable:
         but never committed) are reclaimed by :meth:`gc_orphans`.
         """
         out = os.path.join(self.data_dir, f"{snapshot_hint}-{uuid.uuid4().hex[:8]}")
-        (df.write.mode("errorifexists").partitionBy(bucket_col).parquet(out))
+        (df.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(out))
         # Rename `_bucket=N` -> `bN` so later multi-file reads never trigger
         # Spark's partition-column inference (which would append _bucket to
         # the schema and poison schema-equality checks).
         result: dict[int, list[str]] = {}
         for entry in os.listdir(out):
-            if not entry.startswith(f"{bucket_col}="):
+            if not entry.startswith(f"{BUCKET_COL}="):
                 continue
             b = int(entry.split("=", 1)[1])
             bdir = os.path.join(out, f"b{b}")

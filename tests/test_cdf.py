@@ -346,3 +346,62 @@ def test_empty_feed_reads_with_full_schema(spark, tmp_path):
     merge_batch(table, spark.createDataFrame(pdf), run_id="r", batch_id=0, cdf=cdf)
     real = cdf.read(table=table)
     assert empty.unionByName(real).count() == real.count()
+
+
+def test_every_consumer_agrees_on_the_lww_order(spark, tmp_path):
+    """Same-seq conflicts are decided by the numeric revision generation
+    ('10-a' beats '9-z', which a plain string order gets backwards), and a
+    null _rev ranks lowest. The apply window, read_state, compaction, the
+    lineage counts and the change feed must all name the same winner, and
+    a row that loses to the stored winner must emit no feed row."""
+    import os
+
+    from couch_to_mongo_spark.operators.compact import compact
+
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=2
+    )
+    cdf = ChangeFeedLog(spark, str(tmp_path / "cdf"))
+    ddl = "seq long, op string, conv_id string, turn_idx int, _rev string, text string"
+    b0 = [
+        (5, "u", "k1", 0, "9-z", "k1 nine"),
+        (5, "u", "k1", 0, None, "k1 null"),  # loses inside the batch
+        (6, "u", "k2", 0, "10-a", "k2 ten"),
+        (7, "u", "k3", 0, None, "k3 null"),
+    ]
+    b1 = [
+        (5, "u", "k1", 0, "10-a", "k1 ten"),  # generation 10 > 9: wins
+        (6, "u", "k2", 0, "9-z", "k2 nine"),  # loses to the stored winner
+        (7, "u", "k3", 0, "1-a", "k3 one"),  # any revision beats null
+    ]
+    res = [
+        merge_batch(table, spark.createDataFrame(rows, ddl), run_id="r",
+                    batch_id=i, collect_stats=True, cdf=cdf)
+        for i, rows in enumerate((b0, b1))
+    ]
+    winners = {"k1": "k1 ten", "k2": "k2 ten", "k3": "k3 one"}
+
+    # lineage: batch 1 updates k1 and k3 only
+    assert [(r.n_inserts, r.n_updates, r.n_deletes) for r in res] == [(3, 0, 0), (0, 2, 0)]
+    # change feed: the same two post-images, nothing for the losing k2 row
+    feed = cdf.read(table).toPandas()
+    f0 = feed[feed["_batch_id"] == 0]
+    assert dict(zip(f0["conv_id"], f0["text"])) == {
+        "k1": "k1 nine", "k2": "k2 ten", "k3": "k3 null"
+    }
+    f1 = feed[feed["_batch_id"] == 1]
+    post = f1[f1["_change_type"] == "update_postimage"]
+    assert dict(zip(post["conv_id"], post["text"])) == {"k1": "k1 ten", "k3": "k3 one"}
+    assert "k2" not in set(f1["conv_id"])
+
+    def state():
+        return {r["conv_id"]: r["text"] for r in read_state(table).collect()}
+
+    assert state() == winners
+    # compaction keeps exactly the winners, one row per key in the files
+    compact(table, max_files_per_bucket=0)
+    files = [os.path.join(table.path, f) for f in table.snapshot().all_files()]
+    folded = spark.read.parquet(*files).toPandas()
+    assert len(folded) == 3
+    assert dict(zip(folded["conv_id"], folded["text"])) == winners
+    assert state() == winners

@@ -116,6 +116,17 @@ def test_blas_pairs_match_expression_pairs(spark, emb):
         assert len(expr) > 0
 
 
+def test_blas_pairs_keep_string_labels(emb):
+    """A non-integer blocking key passes through the BLAS kernel as is:
+    string labels give the same pairs, with the same label values, as the
+    expression join form."""
+    df = emb.withColumn("label", F.concat(F.lit("blk-"), F.col("label").cast("string")))
+    expr = V.neardup_pairs_by_label(df, threshold=THRESHOLD).orderBy("id_a", "id_b").collect()
+    blas = V.neardup_pairs_by_label_blas(df, threshold=THRESHOLD).orderBy("id_a", "id_b").collect()
+    assert [tuple(r) for r in expr] == [tuple(r) for r in blas]
+    assert len(expr) > 0 and expr[0]["lbl"].startswith("blk-")
+
+
 def test_lsh_blas_verify_matches_expression_verify(spark, emb):
     """The production BLAS verify (per-probed-bucket gram matrix) must
     emit EXACTLY the expression-join verify's pairs — same candidates by

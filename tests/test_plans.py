@@ -119,22 +119,20 @@ def test_fast_merge_single_shuffle(spark):
     Sort+WindowGroupLimit on the existing partitioning."""
     from pyspark.sql import functions as F
     from couch_to_mongo_spark.operators.dedup import bucket_partitioned_lww
+    from couch_to_mongo_spark.operators.merge import KEY_COLS, lww_order
 
     df = spark.range(10000).select(
         F.concat(F.lit("c"), (F.col("id") % 100).cast("string")).alias("conv_id"),
         (F.col("id") % 40).cast("int").alias("turn_idx"),
         F.col("id").alias("seq"),
-        F.lit(1).alias("rev_gen"),
         F.md5(F.col("id").cast("string")).alias("_rev"),
     )
-    for fpb in (1, 4):
-        out = bucket_partitioned_lww(
-            df, ["conv_id", "turn_idx"], ["seq", "rev_gen", "_rev"],
-            n_buckets=16, files_per_bucket=fpb,
-        )
-        plan = formatted_plan(out)
-        assert count_exchanges(out) == 1, plan
-        assert "WindowGroupLimit" in plan, plan
+    out = bucket_partitioned_lww(
+        df, list(KEY_COLS), lww_order(seq="seq"), n_buckets=16
+    )
+    plan = formatted_plan(out)
+    assert count_exchanges(out) == 1, plan
+    assert "WindowGroupLimit" in plan, plan
 
 
 def test_emb_lsh_pairs_no_cartesian_and_local_expansion(spark):

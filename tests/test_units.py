@@ -246,27 +246,6 @@ def test_merge_stats_classify_delete_reinsert(spark, tmp_path):
     assert (r4.n_inserts, r4.n_updates, r4.n_deletes) == (0, 0, 0)
 
 
-def test_files_per_bucket_splits_hot_buckets_fast_path(spark, tmp_path):
-    """files_per_bucket>1 must produce multiple files per bucket on the
-    fast MOR path too (ADVICE r01: the salt was missing from the
-    repartition keys, collapsing each bucket to one file)."""
-    from couch_to_mongo_spark.gen import make_changes_df
-    from couch_to_mongo_spark.operators.merge import merge_batch, with_engine_schema
-    from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
-    from couch_to_mongo_spark.tableformat import LakeTable
-
-    pdf = make_changes_df(n_events=2000, n_convs=20, seed=61, hot_frac=0.5)
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=2
-    )
-    merge_batch(
-        table, spark.createDataFrame(pdf), run_id="r", batch_id=0,
-        files_per_bucket=4, collect_stats=False,
-    )
-    files = table.snapshot().files
-    assert any(len(fl) > 1 for fl in files.values()), files
-
-
 def test_ann_multiprobe_recall_floor(spark):
     """Multi-probe LSH recovers planted near-duplicates (cosine 0.95):
     recall@1 >= 0.9 at probes=2, monotone in probes (VERDICT r01 next-#9).
@@ -280,30 +259,6 @@ def test_ann_multiprobe_recall_floor(spark):
     r2 = planted_neardup_recall(emb, n_queries=40, probes=2)
     assert r0 <= r1 <= r2
     assert r2 >= 0.9
-
-
-def test_bucket_salt_independent_of_bucket_hash(spark):
-    """files_per_bucket salt must split rows WITHIN a bucket: with the salt
-    derived from the same unseeded hash as the bucket, pmod(h, 4) is
-    constant inside each pmod(h, 16) class (4 | 16), so hot buckets never
-    split. The seeded salt gives >1 distinct salt per bucket."""
-    from pyspark.sql import functions as F
-
-    from couch_to_mongo_spark.operators.dedup import bucket_partitioned_lww
-
-    df = spark.range(2000).select(
-        F.concat(F.lit("conv-"), F.col("id")).alias("conv_id"),
-        (F.col("id") % 5).cast("int").alias("turn_idx"),
-        F.col("id").alias("seq"),
-    )
-    out = bucket_partitioned_lww(
-        df, ["conv_id", "turn_idx"], ["seq"], n_buckets=16, files_per_bucket=4
-    )
-    per_bucket = (
-        out.groupBy("_bucket").agg(F.countDistinct("_salt").alias("ns")).collect()
-    )
-    assert len(per_bucket) == 16
-    assert all(r["ns"] > 1 for r in per_bucket)
 
 
 def test_bootstrap_salt_splits_files_per_bucket(spark, tmp_table_path):
